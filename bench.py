@@ -107,16 +107,17 @@ def flagship_turns_per_sec(
 
     """
     from eva_opentargets_spark.pipeline import run_pipeline
+    from eva_opentargets_spark.session import cache_scope, persist
 
-    transcripts = replicated_transcripts(spark, sf_dir, factor).persist()
-    n_turns = transcripts.count()  # also warms the cache out of the timing
     secs = None
-    for _ in range(runs):
-        res = run_pipeline(spark, transcripts, persist_extracted=persist_extracted)
-        sec = _materialize(res.triples)
-        res.unpersist()
-        secs = sec if secs is None else min(secs, sec)
-    transcripts.unpersist()
+    with cache_scope():
+        transcripts = persist(replicated_transcripts(spark, sf_dir, factor))
+        n_turns = transcripts.count()  # also warms the cache out of the timing
+        for _ in range(runs):
+            with cache_scope():
+                res = run_pipeline(spark, transcripts, persist_extracted=persist_extracted)
+                sec = _materialize(res.triples)
+            secs = sec if secs is None else min(secs, sec)
     return {"n_turns": n_turns, "sec": round(secs, 3), "turns_per_sec": round(n_turns / secs, 1)}
 
 
@@ -197,7 +198,7 @@ def _regression_guard(sf: str, cpus: str, timings: dict) -> list[str]:
 
 def run_headline(sf_dir: str, cpus: str) -> dict:
     from eva_opentargets_spark.queries import QUERIES
-    from eva_opentargets_spark.session import get_spark
+    from eva_opentargets_spark.session import get_spark, release_last_query
 
     spark = get_spark(app_name="bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     # min-of-repeats: this host is shared (outside load average 5-18), so a
@@ -209,6 +210,7 @@ def run_headline(sf_dir: str, cpus: str) -> dict:
         for name in HEADLINE:
             sec = round(_timed(lambda: QUERIES[name](spark, sf_dir)), 3)
             timings[name] = min(sec, timings.get(name, sec))
+    release_last_query()
     # the flagship gets the same min-of-N treatment as every suite query
     # (round-3 verdict #9: a single contended sample needed manual
     # adjudication between sessions)
@@ -231,7 +233,7 @@ def run_headline(sf_dir: str, cpus: str) -> dict:
 
 
 SCALING_REPLICATE = 400  # 2M-turn corpus. Every timed run is COLD: the
-# pipeline's extraction cache is dropped between runs (res.unpersist), so
+# pipeline's extraction cache is dropped between runs (its cache scope), so
 # the measurement includes the extraction pass — round-1/early-round-2
 # "min of repeats" silently reused Spark's logical-plan cache across runs
 # and timed a WARM pipeline (extraction excluded), inflating throughput at

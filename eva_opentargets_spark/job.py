@@ -9,8 +9,8 @@ Usage:
 
 Single-execution design (round-2 fix): each conv_id-bucket wave runs the
 pipeline ONCE — triples, per-wave corpus counters and per-wave distinct-
-mention partials are all written from the same cached extraction, then the
-cache is released. After the waves, the GLOBAL distinct-mention table is
+mention partials are all written from the same cached extraction, which the
+wave's cache scope releases. After the waves, the GLOBAL distinct-mention table is
 re-aggregated from the (tiny) per-wave partials — additive because buckets
 partition conv_ids — and the linking cascade + curation run once at
 dictionary scale. Nothing re-scans the corpus after its wave.
@@ -24,9 +24,10 @@ import time
 from pyspark.sql import SparkSession, functions as F
 
 from eva_opentargets_spark.operators.curation import curation_table
-from eva_opentargets_spark.operators.linking import link_cascade, unpersist_cascade
-from eva_opentargets_spark.pipeline import compute_metrics, run_pipeline
+from eva_opentargets_spark.operators.linking import link_cascade
+from eva_opentargets_spark.pipeline import compute_metrics, link_counters, run_pipeline
 from eva_opentargets_spark.plans.checkpoint import run_waves
+from eva_opentargets_spark.session import cache_scope
 from eva_opentargets_spark.sources.dictionary import demo_terms, demo_xrefs
 from eva_opentargets_spark.sources.transcripts import derive_transcripts, read_transcripts
 
@@ -52,16 +53,14 @@ def main(argv=None):
 
     def build_wave(wave_turns):
         # waves run several actions over the same extraction (triples write,
-        # metrics agg, distinct partials, count) -> caching wins here, and
-        # the per-wave cache is released right after the wave's writes
+        # metrics agg, distinct partials, count) -> caching wins here; the
+        # wave's cache scope releases it right after the wave's writes
         res = run_pipeline(spark, wave_turns, terms=terms, xrefs=xrefs, persist_extracted=True)
-        wave_metrics = compute_metrics(spark, res, run_id, partition="wave", corpus_only=True)
-        tables = {
+        return {
             "triples": res.triples,
-            "wave_metrics": wave_metrics,
+            "wave_metrics": compute_metrics(spark, res, run_id, partition="wave", corpus_only=True),
             "wave_distinct": res.distinct,
         }
-        return tables, res.unpersist
 
     manifest = run_waves(
         spark,
@@ -83,41 +82,27 @@ def main(argv=None):
             F.sum("n_conversations").alias("n_conversations"),
         )
     )
-    links, candidates, unresolved = link_cascade(global_distinct, terms, xrefs)
-    curation_table(unresolved, candidates, global_distinct).write.mode("overwrite").parquet(
-        f"{args.output}/curation"
-    )
+    with cache_scope():
+        links, candidates, unresolved = link_cascade(global_distinct, terms, xrefs)
+        curation_table(unresolved, candidates, global_distinct).write.mode("overwrite").parquet(
+            f"{args.output}/curation"
+        )
 
-    # final metrics table: summed per-wave corpus counters + one set of
-    # link-grain counters from the global cascade
-    corpus_totals = (
-        spark.read.parquet(f"{args.output}/wave_metrics")
-        .groupBy("counter")
-        .agg(F.sum("value").alias("value"))
-        .select(F.lit(run_id).alias("run_id"), F.lit("all").alias("partition"), "counter", "value")
-    )
-    by_type = {
-        r["match_type"]: r["n"]
-        for r in links.select("mention_norm", "match_type")
-        .distinct()
-        .groupBy("match_type")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    link_rows = [
-        (run_id, "all", "mentions_distinct", global_distinct.count()),
-        (run_id, "all", "unmapped", unresolved.count()),
-    ] + [
-        (run_id, "all", f"linked_{mt}", int(by_type.get(mt, 0)))
-        for mt in ("exact", "normalized", "fuzzy", "xref", "replacement")
-    ]
-    link_metrics = spark.createDataFrame(
-        link_rows, "run_id string, partition string, counter string, value long"
-    )
-    corpus_totals.unionByName(link_metrics).write.mode("overwrite").parquet(
-        f"{args.output}/metrics"
-    )
-    unpersist_cascade(links)
+        # final metrics table: summed per-wave corpus counters + one set of
+        # link-grain counters from the global cascade
+        corpus_totals = (
+            spark.read.parquet(f"{args.output}/wave_metrics")
+            .groupBy("counter")
+            .agg(F.sum("value").alias("value"))
+            .select(F.lit(run_id).alias("run_id"), F.lit("all").alias("partition"), "counter", "value")
+        )
+        link_metrics = spark.createDataFrame(
+            [(run_id, "all", k, v) for k, v in link_counters(links, unresolved)],
+            "run_id string, partition string, counter string, value long",
+        )
+        corpus_totals.unionByName(link_metrics).write.mode("overwrite").parquet(
+            f"{args.output}/metrics"
+        )
     print(f"completed buckets: {sorted(manifest.completed())}")
     spark.stop()
 

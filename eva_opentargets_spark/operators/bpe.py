@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import cache_scope, persist
+
 SEP = "\x1f"  # unit separator: never appears in tokenized text by contract
 
 
@@ -99,9 +101,9 @@ def bpe_merges(docs: DataFrame, n_merges: int = 6, text_col: str = "text") -> Da
     # (the top-1 collect, which also populates the cache on round 1).
     # That halves the driver-loop job count (13 -> 7 actions for 6
     # merges); measured 6.2 -> ~2.8 s at sf0.1 (bench_extra, min-of-2).
-    base = word_vocab(docs, text_col).withColumn("s", _wrapped(F.col("word"))).persist()
     merges: list[tuple[int, str, str, int]] = []
-    try:
+    with cache_scope():
+        base = persist(word_vocab(docs, text_col).withColumn("s", _wrapped(F.col("word"))))
         for rnd in range(1, n_merges + 1):
             s = F.col("s")
             for _, lhs, rhs, _cnt in merges:
@@ -122,8 +124,6 @@ def bpe_merges(docs: DataFrame, n_merges: int = 6, text_col: str = "text") -> Da
                 break
             lhs, rhs, cnt = top[0]["lhs"], top[0]["rhs"], int(top[0]["cnt"])
             merges.append((rnd, lhs, rhs, cnt))
-    finally:
-        base.unpersist()
     return spark.createDataFrame(
         merges, "merge_rank int, lhs string, rhs string, pair_count long"
     )

@@ -26,6 +26,7 @@ from ..config import (
     PRED_CANONICAL,
     PRED_DIRECT,
 )
+from ..session import persist
 
 LINK_COLUMNS = ["mention_norm", "term_id", "match_type", "confidence", "pred"]
 
@@ -285,8 +286,6 @@ def link_cascade(
     distinct_mentions: DataFrame,
     terms: DataFrame,
     xrefs: DataFrame,
-    n_link_partitions: int = 1,
-    fuzzy_path: str = "auto",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Full cascade. Returns (links, candidates, unresolved).
 
@@ -300,22 +299,18 @@ def link_cascade(
     so each anti/semi join is broadcast-hinted — the whole cascade runs
     without a single shuffle exchange.
 
-    fuzzy_path: 'jvm' (broadcast levenshtein join), 'arrow' (length-band
-    pandas UDF), or 'auto' (arrow when the dictionary exceeds
-    ARROW_FUZZY_TERM_THRESHOLD terms — the broadcast-nested-loop stops being
-    sane around there).
+    The fuzzy tier takes the Arrow length-band UDF when the dictionary
+    exceeds ARROW_FUZZY_TERM_THRESHOLD terms (the broadcast nested-loop
+    stops being sane around there) and the JVM broadcast join below it.
 
-    The persisted intermediates are recorded on the returned links frame;
-    call :func:`unpersist_cascade` when done with a run to release them.
+    The persisted intermediates belong to the enclosing cache owner
+    (session.cache_scope or the query registry).
     """
     # The distinct-mention table is dictionary-scale BY DESIGN (the A1
     # pre-aggregation already collapsed the corpus); coalesce it so every
     # cascade stage is a single-task job instead of shuffle-partition-many
-    # near-empty tasks. Raise n_link_partitions if distinct mentions ever
-    # reach the hundreds of millions.
-    mentions = (
-        distinct_mentions.select("mention_norm").coalesce(n_link_partitions).persist()
-    )
+    # near-empty tasks.
+    mentions = persist(distinct_mentions.select("mention_norm").coalesce(1))
 
     # --- Tiers 1+2 (exact, normalized) in ONE broadcast join + aggregation
     # (round 6). Exact equality implies fold equality (the fold is a pure
@@ -339,7 +334,7 @@ def link_cascade(
     # (count_distinct ignores it -> n_fold = 0), so the unresolved
     # remainder is a FILTER of this one aggregate — no anti-join, no extra
     # broadcast build on the critical path.
-    tier12 = (
+    tier12 = persist(
         mentions.withColumn("mention_fold", _fold(F.col("mention_norm")))
         .join(F.broadcast(surface), F.col("mention_fold") == F.col("label_fold"), "left")
         .groupBy("mention_norm")
@@ -349,7 +344,6 @@ def link_cascade(
             F.count_distinct("term_id").alias("n_fold"),
             F.min("term_id").alias("fold_term"),
         )
-        .persist()
     )
 
     def _tier(term_col: str, match_type: str) -> list:
@@ -369,22 +363,19 @@ def link_cascade(
         (F.col("n_exact") != 1) & (F.col("n_fold") != 1)
     ).select("mention_norm")
 
-    if fuzzy_path == "auto":
-        # dictionary row count for the Arrow-vs-JVM gate, cached on the
-        # (memoized) terms frame so repeated cascade builds in one session
-        # pay the count job once
-        n_terms = getattr(terms, "_cascade_term_count", None)
-        if n_terms is None:
-            n_terms = terms.count()
-            terms._cascade_term_count = n_terms
-        fuzzy_path = "arrow" if n_terms > ARROW_FUZZY_TERM_THRESHOLD else "jvm"
-    if fuzzy_path == "arrow":
+    # dictionary row count for the Arrow-vs-JVM gate, cached on the
+    # (memoized) terms frame so repeated cascade builds in one session pay
+    # the count job once
+    n_terms = getattr(terms, "_cascade_term_count", None)
+    if n_terms is None:
+        n_terms = terms.count()
+        terms._cascade_term_count = n_terms
+    if n_terms > ARROW_FUZZY_TERM_THRESHOLD:
         from .fuzzy_udf import fuzzy_candidates_arrow
 
-        cands = fuzzy_candidates_arrow(unresolved1, terms)
-        cands = cands.persist()
+        cands = persist(fuzzy_candidates_arrow(unresolved1, terms))
     else:
-        cands = fuzzy_candidates(unresolved1, terms).persist()
+        cands = persist(fuzzy_candidates(unresolved1, terms))
 
     # --- Tiers 3-5 from the ONE persisted candidate table, with tier
     # PRECEDENCE as a window instead of an anti-join ladder (round 6):
@@ -411,22 +402,12 @@ def link_cascade(
         .select(*LINK_COLUMNS)
     )
 
-    links = (
+    links = persist(
         exact.unionByName(normalized).unionByName(links345).select(*LINK_COLUMNS)
-    ).persist()
+    )
     # the final remainder is LAZY (only kg_unmapped/curation consumers
     # materialize it): unresolved1 minus every tier-3/4/5-linked mention
     unresolved4 = unresolved1.join(
         links345.select("mention_norm").distinct(), "mention_norm", "left_anti"
     )
-    # record what we persisted so callers can release executor memory after
-    # the run (round-1 verdict: the cascade leaked 6 persists per invocation)
-    links._cascade_persisted = [mentions, tier12, cands, links]
     return links, cands, unresolved4
-
-
-def unpersist_cascade(links: DataFrame) -> None:
-    """Release every DataFrame persisted by the link_cascade invocation that
-    produced `links` (no-op for frames not built by link_cascade)."""
-    for df in getattr(links, "_cascade_persisted", []):
-        df.unpersist()

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import MAX_XREF_DISTANCE
+from ..session import cache_scope, persist
 
 
 def xref_closure(seeds: DataFrame, edges: DataFrame, max_distance: int = MAX_XREF_DISTANCE) -> DataFrame:
@@ -28,28 +29,23 @@ def xref_closure(seeds: DataFrame, edges: DataFrame, max_distance: int = MAX_XRE
     e = F.broadcast(edges.select(F.col("src_curie").alias("node"), F.col("dst_curie").alias("nxt")).distinct())
     visited = seeds.select(F.col("seed_id"), F.col("seed_id").alias("node"), F.lit(0).alias("distance"))
     frontier = visited
-    persisted = []
-    for d in range(1, max_distance + 1):
-        nxt = (
-            frontier.join(e, "node", "inner")
-            .select("seed_id", F.col("nxt").alias("node"), F.lit(d).alias("distance"))
-            .distinct()
-            .join(visited.select("seed_id", "node"), ["seed_id", "node"], "left_anti")
-            .persist()
-        )
-        persisted.append(nxt)
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    # Release the frontier caches before returning (round-2 verdict: they
-    # leaked across invocations). The loop itself reused each frontier 3-4
-    # times (isEmpty probe, next round's join, union, anti-join) — that reuse
-    # is where the persist paid; the returned plan recomputes at most
-    # `max_distance` rounds of broadcast joins over dictionary-scale frames
-    # once, when the caller consumes it.
-    for df in persisted:
-        df.unpersist()
+    # The frontier caches are released when the loop ends. The loop reuses
+    # each frontier 3-4 times (isEmpty probe, next round's join, union,
+    # anti-join) — that reuse is where the persist pays; the returned plan
+    # recomputes at most `max_distance` rounds of broadcast joins over
+    # dictionary-scale frames once, when the caller consumes it.
+    with cache_scope():
+        for d in range(1, max_distance + 1):
+            nxt = persist(
+                frontier.join(e, "node", "inner")
+                .select("seed_id", F.col("nxt").alias("node"), F.lit(d).alias("distance"))
+                .distinct()
+                .join(visited.select("seed_id", "node"), ["seed_id", "node"], "left_anti")
+            )
+            if nxt.isEmpty():
+                break
+            visited = visited.unionByName(nxt)
+            frontier = nxt
     return visited.filter(F.col("distance") > 0)
 
 

@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONV_BUCKETS
+from ..session import cache_scope
 
 
 def bucket_col(n_buckets: int):
@@ -79,21 +80,21 @@ def run_waves(
     spark: SparkSession,
     transcripts: DataFrame,
     output_dir: str,
-    build_wave,  # (DataFrame) -> (dict[str, DataFrame], cleanup_fn | None)
+    build_wave,  # (DataFrame) -> dict[str, DataFrame]
     n_buckets: int = DEFAULT_CONV_BUCKETS,
     wave_size: int = 8,
 ) -> CheckpointManifest:
     """Compute per-wave output tables bucket-by-bucket, resumable.
 
-    build_wave maps a wave's transcript DataFrame to ({name: DataFrame},
-    cleanup) where 'triples' is required; every table is written under
+    build_wave maps a wave's transcript DataFrame to {name: DataFrame}
+    where 'triples' is required; every table is written under
     output_dir/<name>/bucket=... with dynamic partition overwrite, so a
     resumed run overwrites rather than duplicates (A4 invariant). Side
     tables (per-wave metrics, distinct-mention partials) ride along in the
     SAME wave so nothing is recomputed after the waves finish — the round-1
     job.py re-ran the whole pipeline for metrics/curation (verdict #2).
-    cleanup (if not None) runs after the wave's writes, e.g. to unpersist
-    the wave's cached extraction table.
+    Each wave runs inside one cache scope, so whatever build_wave persists
+    (e.g. the wave's cached extraction table) is released after its writes.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     manifest = CheckpointManifest(output_dir)
@@ -104,32 +105,31 @@ def run_waves(
     for i in range(0, len(pending), wave_size):
         wave = pending[i : i + wave_size]
         wave_turns = bucketed.filter(F.col("bucket").isin(wave))
-        tables, cleanup = build_wave(wave_turns.drop("bucket"))
-        triples = tables["triples"].withColumn("bucket", bucket_col(n_buckets))
-        (
-            triples.repartition(len(wave), "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(output_dir, "triples"))
-        )
-        for name, df in tables.items():
-            if name == "triples":
-                continue
-            # side tables are small (dictionary/counter scale); one file per
-            # wave, tagged by the wave's first bucket for overwrite-idempotency
+        with cache_scope():
+            tables = build_wave(wave_turns.drop("bucket"))
+            triples = tables["triples"].withColumn("bucket", bucket_col(n_buckets))
             (
-                df.withColumn("bucket", F.lit(wave[0]))
-                .coalesce(1)
+                triples.repartition(len(wave), "bucket")
                 .write.mode("overwrite")
                 .partitionBy("bucket")
-                .parquet(os.path.join(output_dir, name))
+                .parquet(os.path.join(output_dir, "triples"))
             )
-        counts = {
-            r["bucket"]: r["n"]
-            for r in triples.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-        }
-        if cleanup is not None:
-            cleanup()
+            for name, df in tables.items():
+                if name == "triples":
+                    continue
+                # side tables are small (dictionary/counter scale); one file per
+                # wave, tagged by the wave's first bucket for overwrite-idempotency
+                (
+                    df.withColumn("bucket", F.lit(wave[0]))
+                    .coalesce(1)
+                    .write.mode("overwrite")
+                    .partitionBy("bucket")
+                    .parquet(os.path.join(output_dir, name))
+                )
+            counts = {
+                r["bucket"]: r["n"]
+                for r in triples.groupBy("bucket").agg(F.count("*").alias("n")).collect()
+            }
         for b in wave:
             manifest.mark(b, {"triples_emitted": int(counts.get(b, 0))})
     return manifest
@@ -148,7 +148,7 @@ def run_with_checkpoint(
         spark,
         transcripts,
         output_dir,
-        lambda t: ({"triples": build_triples(t)}, None),
+        lambda t: {"triples": build_triples(t)},
         n_buckets=n_buckets,
         wave_size=wave_size,
     )

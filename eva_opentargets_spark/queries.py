@@ -25,6 +25,7 @@ from .operators.linking import (
 )
 from .operators.mentions import distinct_mentions, extract_mentions, valid_turns
 from .pipeline import compute_metrics, mappings_from_links, merge_mapping_databases, run_pipeline
+from .session import registry_query
 from .sources.dictionary import demo_previous_mappings, demo_terms, demo_xrefs
 from .sources.transcripts import derive_transcripts
 
@@ -905,6 +906,9 @@ def orders_by_nation(spark, sf_dir):
     )
 
 
+# Each entry releases the caches the previous entry persisted: callers
+# consume the returned lazy frame after the call, so the next query's start
+# is the release point (session.registry_query).
 QUERIES = {
     "kg_transcripts": kg_transcripts,
     "kg_valid_turns": kg_valid_turns,
@@ -978,3 +982,4 @@ QUERIES = {
     "tpch_q1_pricing": tpch_q1_pricing,
     "orders_by_nation": orders_by_nation,
 }
+QUERIES = {name: registry_query(fn) for name, fn in QUERIES.items()}

@@ -4,13 +4,70 @@ Defaults target the sandbox (local[N], 128 GiB) but every knob is the one
 you would set on a 1000-executor cluster: AQE on (runtime re-plan +
 skew-join splitting), modest advisory partition sizes, Arrow enabled for
 the pandas-UDF mention/linking path.
+
+Cache lifetime: every cached intermediate goes through :func:`persist`,
+which records the frame with each open owner. A ``with cache_scope():``
+block unpersists what was recorded inside it at exit; a registry query
+(:func:`registry_query`) releases what the previous registry call
+recorded, because its consumer reads lazy frames after the call returns.
+A frame persisted outside any owner stays cached until the session ends.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_owners: list[list[DataFrame]] = []  # open owners, innermost last
+_last_query: list[DataFrame] = []  # what the last registry call recorded
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist `df` and record it with every open owner."""
+    df = df.persist()
+    for held in _owners:
+        held.append(df)
+    return df
+
+
+def _release(held: list[DataFrame]) -> None:
+    while held:
+        held.pop().unpersist()
+
+
+@contextmanager
+def cache_scope():
+    """Unpersist, at exit, everything persisted inside the block."""
+    held: list[DataFrame] = []
+    _owners.append(held)
+    try:
+        yield
+    finally:
+        _owners.pop()
+        _release(held)
+
+
+def release_last_query() -> None:
+    """Unpersist what the last registry query recorded."""
+    _release(_last_query)
+
+
+def registry_query(fn):
+    """Wrap a registry query so it first releases the previous one's caches."""
+
+    @functools.wraps(fn)
+    def run(*args, **kwargs):
+        release_last_query()
+        _owners.append(_last_query)
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            _owners.pop()
+
+    return run
 
 
 def estimated_input_splits(df) -> int:
@@ -25,9 +82,15 @@ def estimated_input_splits(df) -> int:
     parquet scan sizeInBytes is the exact file-size sum, so the estimate
     matches Spark's own split math to within openCost rounding; both
     over- and under-estimates only move a heuristic whose two outcomes
-    are 'repartition to cores' vs 'inherit input layout'."""
+    are 'repartition to cores' vs 'inherit input layout'.
+
+    Sources without statistics (RDD- or Python-list-backed frames) report
+    spark.sql.defaultSizeInBytes; that reads as "unknown", and the frame's
+    own partition count answers instead."""
     jqe = df._jdf.queryExecution()
     size = int(str(jqe.optimizedPlan().stats().sizeInBytes()))
+    if size >= df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes():
+        return df.rdd.getNumPartitions()
     conf = df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     unit = {"k": 1024, "m": 1024**2, "g": 1024**3, "b": 1}
     low = conf.strip().lower()
@@ -66,8 +129,8 @@ def get_spark(
             os.environ.get("SPARK_INITIAL_PARTITIONS", str(max(256, 8 * shuffle))),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Let AQE re-partition CACHED plans too (off by default): the round-6
-        # lineage-held persists (bpe vocab, band/fingerprint tables, cascade
+        # Let AQE re-partition CACHED plans too (off by default): the
+        # persisted intermediates (bpe vocab, band/fingerprint tables, cascade
         # aggregates, propagation rounds) otherwise materialize at
         # initialPartitionNum granularity no matter how small the data is —
         # the 31-row BPE vocab cached as 256 partitions, so every merge-round
@@ -75,10 +138,7 @@ def get_spark(
         # the cached plan by DATA (same advisory target as any shuffle), so
         # dictionary-scale caches collapse to 1 task and corpus-scale caches
         # keep their parallelism at any SF.
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_CACHED_PLAN_AQE", "true"),
-        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")

@@ -11,6 +11,7 @@ from eva_opentargets_spark.plans.checkpoint import (
     read_checkpointed_triples,
     run_with_checkpoint,
 )
+from eva_opentargets_spark.session import cache_scope
 
 
 def test_checkpoint_resume_idempotent(spark, tmp_path):
@@ -65,7 +66,7 @@ def test_partial_resume(spark, tmp_path):
 def test_run_waves_side_tables_and_cleanup(spark, tmp_path):
     """run_waves writes per-wave side tables (metrics/distinct partials) in
     the SAME wave as the triples — the single-execution job design — and
-    runs the cleanup hook after each wave."""
+    releases what each wave persisted once its writes are done."""
     from pyspark.sql import functions as F
 
     from eva_opentargets_spark.pipeline import compute_metrics
@@ -73,18 +74,17 @@ def test_run_waves_side_tables_and_cleanup(spark, tmp_path):
 
     transcripts, _ = synth.generate(spark, n_convs=8, turns_per_conv=4, seed=9)
     out = str(tmp_path / "waves")
-    cleanups = []
+    extracted = []
 
     def build_wave(t):
-        res = run_pipeline(spark, t)
+        res = run_pipeline(spark, t, persist_extracted=True)
+        extracted.append(res.extracted)
         met = compute_metrics(spark, res, "r", partition="wave", corpus_only=True)
-        def cleanup():
-            cleanups.append(1)
-            res.unpersist()
-        return {"triples": res.triples, "wave_metrics": met, "wave_distinct": res.distinct}, cleanup
+        return {"triples": res.triples, "wave_metrics": met, "wave_distinct": res.distinct}
 
     run_waves(spark, transcripts, out, build_wave, n_buckets=4, wave_size=2)
-    assert len(cleanups) == 2  # one per wave
+    assert len(extracted) == 2  # one per wave
+    assert not any(df.is_cached for df in extracted)
 
     # per-wave corpus counters sum to the whole-corpus counters
     wave_metrics = spark.read.parquet(f"{out}/wave_metrics")
@@ -92,14 +92,14 @@ def test_run_waves_side_tables_and_cleanup(spark, tmp_path):
         r["counter"]: r["v"]
         for r in wave_metrics.groupBy("counter").agg(F.sum("value").alias("v")).collect()
     }
-    res_all = run_pipeline(spark, transcripts)
-    met_all = {
-        r["counter"]: r["value"]
-        for r in compute_metrics(spark, res_all, "r", corpus_only=True).collect()
-    }
+    with cache_scope():
+        res_all = run_pipeline(spark, transcripts)
+        met_all = {
+            r["counter"]: r["value"]
+            for r in compute_metrics(spark, res_all, "r", corpus_only=True).collect()
+        }
     for k, v in met_all.items():
         assert totals[k] == v, (k, totals[k], v)
-    res_all.unpersist()
 
     # distinct-mention partials re-aggregate to the global distinct table
     glob = (
@@ -107,11 +107,11 @@ def test_run_waves_side_tables_and_cleanup(spark, tmp_path):
         .groupBy("mention_norm")
         .agg(F.sum("freq").alias("freq"), F.sum("occurrences").alias("occurrences"))
     )
-    res2 = run_pipeline(spark, transcripts)
-    want = {(r["mention_norm"], r["freq"], r["occurrences"]) for r in res2.distinct.collect()}
+    with cache_scope():
+        res2 = run_pipeline(spark, transcripts)
+        want = {(r["mention_norm"], r["freq"], r["occurrences"]) for r in res2.distinct.collect()}
     got = {(r["mention_norm"], r["freq"], r["occurrences"]) for r in glob.collect()}
     assert got == want
-    res2.unpersist()
 
 
 def test_spill_reload_phase_boundary(spark, tmp_path):
@@ -124,17 +124,16 @@ def test_spill_reload_phase_boundary(spark, tmp_path):
     from eva_opentargets_spark.sources.transcripts import derive_transcripts
 
     t = derive_transcripts(spark, "/root/testdata/sf0.001")
-    res_mem = run_pipeline(spark, t)
-    res_spill = run_pipeline(spark, t, spill_dir=str(tmp_path / "phases"))
+    with cache_scope():
+        res_mem = run_pipeline(spark, t)
+        res_spill = run_pipeline(spark, t, spill_dir=str(tmp_path / "phases"))
 
-    # the spilled table exists on disk and is what downstream read
-    import os
-    assert os.path.isdir(tmp_path / "phases" / "distinct_mentions")
-    want = {tuple(r) for r in res_mem.links.collect()}
-    got = {tuple(r) for r in res_spill.links.collect()}
+        # the spilled table exists on disk and is what downstream read
+        import os
+        assert os.path.isdir(tmp_path / "phases" / "distinct_mentions")
+        want = {tuple(r) for r in res_mem.links.collect()}
+        got = {tuple(r) for r in res_spill.links.collect()}
     assert got == want
-    res_mem.unpersist()
-    res_spill.unpersist()
 
     # CSV wire format round-trips the dictionary-scale table too (the
     # reference's actual spill format)

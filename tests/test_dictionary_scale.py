@@ -33,6 +33,7 @@ from eva_opentargets_spark.operators.evidence import evidence_product, with_dise
 from eva_opentargets_spark.operators.linking import ARROW_FUZZY_TERM_THRESHOLD
 from eva_opentargets_spark.operators.records import with_record_attrs
 from eva_opentargets_spark.pipeline import run_pipeline
+from eva_opentargets_spark.session import cache_scope
 from eva_opentargets_spark.sources.dictionary import demo_terms, demo_xrefs
 from eva_opentargets_spark.sources.transcripts import derive_transcripts
 
@@ -92,8 +93,8 @@ def _physical_plan(df) -> str:
 def test_dictionary_scale_cascade_selects_arrow_and_links(spark, big_terms):
     assert big_terms.count() > ARROW_FUZZY_TERM_THRESHOLD
     transcripts = derive_transcripts(spark, SF_DIR)
-    res = run_pipeline(spark, transcripts, terms=big_terms, xrefs=demo_xrefs(spark))
-    try:
+    with cache_scope():
+        res = run_pipeline(spark, transcripts, terms=big_terms, xrefs=demo_xrefs(spark))
         # (a) the candidates frame must be the Arrow fuzzy scorer's output
         assert "ArrowEvalPython" in _physical_plan(res.candidates), (
             "auto gate did not select the Arrow fuzzy path at 30k terms"
@@ -109,8 +110,6 @@ def test_dictionary_scale_cascade_selects_arrow_and_links(spark, big_terms):
         assert ("spark", "EFO:0001", "exact") in links
         assert ("batch", "EFO:0018", "normalized") in links
         assert res.triples.limit(1).count() == 1
-    finally:
-        res.unpersist()
 
 
 def test_metrics_gate_counts_before_collecting(spark, monkeypatch):
@@ -126,8 +125,8 @@ def test_metrics_gate_counts_before_collecting(spark, monkeypatch):
     from eva_opentargets_spark.config import MAPPING_LITERAL_THRESHOLD
     from eva_opentargets_spark.pipeline import compute_metrics
 
-    res = run_pipeline(spark, derive_transcripts(spark, SF_DIR))
-    try:
+    with cache_scope():
+        res = run_pipeline(spark, derive_transcripts(spark, SF_DIR))
         n = MAPPING_LITERAL_THRESHOLD + 10
         big_links = spark.createDataFrame(
             [(f"m{i}", f"T:{i}", "exact") for i in range(n)],
@@ -156,8 +155,6 @@ def test_metrics_gate_counts_before_collecting(spark, monkeypatch):
         assert ("mention_norm", "n") not in collected, (
             "metrics path collected the link-fanout map above the literal gate"
         )
-    finally:
-        res.unpersist()
 
 
 def test_dictionary_scale_disease_groups_udf_and_evidence(spark):

@@ -2,6 +2,10 @@
 __spark_entry__ query on Spark AND its oracle on DuckDB, compare
 row counts, column names, and order-insensitive values.
 
+After the query loop it releases the registry's caches and fails if
+Spark's CacheManager still holds anything: a persisted intermediate that
+outlives its query is a leak.
+
 Usage: python tools/check_parity.py [sf_dir] [query ...]
 """
 
@@ -46,7 +50,7 @@ def main():
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry
-    from eva_opentargets_spark.session import get_spark
+    from eva_opentargets_spark.session import get_spark, release_last_query
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     con = duck_connection(sf_dir)
@@ -91,6 +95,10 @@ def main():
             continue
         print(f"OK   {name}: {len(s_rows)} rows match")
 
+    release_last_query()
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        failures.append(("cache", "CacheManager not empty after releasing the registry"))
+        print("FAIL cache: CacheManager still holds entries after the query loop")
     print(f"\n{len(failures)} failures" if failures else "\nALL MATCH")
     spark.stop()
     sys.exit(1 if failures else 0)
